@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .linalg import cosine
 from .._serde import register_self_contained
+from ..operators.caching import session_memo
 from ..session import local_df
 
 register_self_contained(__name__)
@@ -405,16 +406,6 @@ def write_ivf_index(
 # incremental_dedup.)
 
 
-# Parsed-Column cache for _cells_literal, keyed by (applicationId, refs
-# fingerprint). Caches the EXPRESSION only — a pure literal, no data, no
-# plan, no results — so reuse is trivially bit-identical; keying by
-# applicationId drops entries with the JVM gateway that parsed them. The
-# IVF-PQ lifecycle (build -> incremental add -> search) builds this same
-# literal 3+ times per query invocation, so the memo turns repeat builds
-# into a dict hit.
-_CELLS_LIT_CACHE: dict[tuple, F.Column] = {}
-
-
 def _double_sql(x: float) -> str:
     """``x`` as a Catalyst double literal. ``repr`` emits the shortest
     string that round-trips under correct rounding, and Catalyst parses
@@ -435,7 +426,7 @@ def _cells_literal(refs: list[tuple[int, list[float]]]) -> F.Column:
     matrix, ~1.1s per ``_cells_literal`` call, rebuilt for encode, probe
     AND search plans (the ~2.9s of driver-side plan construction VERDICT
     r14 #2 traced on the IVF-PQ lifecycle). The ``F.expr`` parses are ~5ms
-    total, and the built Column is memoized per (applicationId, refs) so
+    total, and the built Column is memoized per (session, refs) so
     repeat builds in one lifecycle are dict hits. The parsed arrays are
     foldable (constant-folded to the same Literal nodes before execution);
     values are bit-identical because shortest-repr doubles re-parse to the
@@ -450,40 +441,40 @@ def _cells_literal(refs: list[tuple[int, list[float]]]) -> F.Column:
     fast = all(math.isfinite(x) for _, rv in refs for x in rv) and all(
         -(1 << 31) <= int(c) < (1 << 31) for c, _ in refs
     )
-    if fast:
-        from pyspark import SparkContext
 
-        sc = SparkContext._active_spark_context
-        app = sc.applicationId if sc is not None else ""
-        key = (app, tuple((int(c), tuple(map(float, rv))) for c, rv in refs))
-        hit = _CELLS_LIT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        cells = F.expr(
-            "array(" + ",".join(str(int(c)) for c, _ in refs) + ")"
-        )
-        rvs = F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(_double_sql(x) for x in rv) + ")"
-                for _, rv in refs
+    def build() -> F.Column:
+        if fast:
+            cells = F.expr(
+                "array(" + ",".join(str(int(c)) for c, _ in refs) + ")"
             )
-            + ")"
-        ).cast("array<array<double>>")
-    else:
-        cells = F.lit([int(c) for c, _ in refs])
-        rvs = F.lit([[float(x) for x in rv] for _, rv in refs]).cast(
-            "array<array<double>>"
+            rvs = F.expr(
+                "array("
+                + ",".join(
+                    "array(" + ",".join(_double_sql(x) for x in rv) + ")"
+                    for _, rv in refs
+                )
+                + ")"
+            ).cast("array<array<double>>")
+        else:
+            cells = F.lit([int(c) for c, _ in refs])
+            rvs = F.lit([[float(x) for x in rv] for _, rv in refs]).cast(
+                "array<array<double>>"
+            )
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(len(refs) - 1)),
+            lambda i: F.struct(
+                F.get(cells, i).alias("cell"), F.get(rvs, i).alias("rv")
+            ),
         )
-    col = F.transform(
-        F.sequence(F.lit(0), F.lit(len(refs) - 1)),
-        lambda i: F.struct(
-            F.get(cells, i).alias("cell"), F.get(rvs, i).alias("rv")
-        ),
-    )
-    if fast:
-        _CELLS_LIT_CACHE[key] = col
-    return col
+
+    if not fast:
+        return build()
+    # Memoized per refs within the session (caching.py::session_memo): the
+    # IVF-PQ lifecycle (build -> incremental add -> search) builds this same
+    # literal 3+ times per query invocation. Only the EXPRESSION is cached —
+    # a pure literal, no data, no plan, no results.
+    key = tuple((int(c), tuple(map(float, rv))) for c, rv in refs)
+    return session_memo(("_cells_literal", key), build)
 
 
 def assign_cells_deterministic(

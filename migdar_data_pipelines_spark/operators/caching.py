@@ -17,13 +17,50 @@ footprint with no harness cooperation. The currently-returned DataFrame is
 never unpersisted before its action runs because release happens only when
 the NEXT query is invoked, after the caller has consumed the previous result
 (the contract of every sequential runner here).
+
+``session_memo`` is the one memo for driver-side artifacts that are valid
+only inside the Spark application that built them: analyzed table plans,
+inferred schemas and parsed Column expressions (py4j handles into one JVM
+gateway). It stores no data and no results.
 """
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame
 
 _SCOPED: list[DataFrame] = []
+
+T = TypeVar("T")
+
+# (applicationId, *caller key) -> value. Only one SparkContext is active per
+# process, so entries under any other application id belong to a stopped
+# session: they can never hit again and are dropped on the next miss.
+_SESSION_MEMO: dict[tuple, object] = {}
+_MISS = object()
+
+
+def _active_app_id() -> str:
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    return sc.applicationId if sc is not None else ""
+
+
+def session_memo(key: tuple, build: Callable[[], T]) -> T:
+    """The value memoized under ``key`` for the active Spark application;
+    on a miss, evict dead applications' entries, then ``build()`` and store.
+    Callers start ``key`` with their own name so keys never collide."""
+    app = _active_app_id()
+    full = (app, *key)
+    hit = _SESSION_MEMO.get(full, _MISS)
+    if hit is not _MISS:
+        return hit
+    for k in [k for k in _SESSION_MEMO if k[0] != app]:
+        del _SESSION_MEMO[k]
+    value = _SESSION_MEMO[full] = build()
+    return value
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:

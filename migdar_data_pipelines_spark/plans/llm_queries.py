@@ -181,26 +181,7 @@ def token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_langid_documents",
-    sql=None,  # SQL installed below (generated quality fragment)
-)
-def quality_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring (length/punct/stopword blend) + marker-word language
-    ID. Quality is EXACT integer basis points on both engines
-    (llm/textanalysis.py::quality_score / quality_sql — the sf0.1 parity
-    gate caught the old round(double, 4) flipping on exact .00005
-    boundaries, PARITY r12)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        quality_score("text").alias("quality"),
-        language_id("text").alias("lang_pred"),
-    )
-
-
-def _install_quality_langid_sql() -> None:
-    from ..llm.textanalysis import quality_sql
-
-    QUERIES["quality_langid_documents"]["sql"] = rf"""
+    sql=rf"""
 WITH w AS (
   SELECT doc_id, text,
          list_filter(string_split_regex(trim(text), '[ \t\n\f\r]+'), x -> x <> '') AS words
@@ -222,10 +203,20 @@ SELECT doc_id, quality,
             WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
             ELSE 'und' END AS lang_pred
 FROM m
-"""
-
-
-_install_quality_langid_sql()
+""",
+)
+def quality_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality scoring (length/punct/stopword blend) + marker-word language
+    ID. Quality is EXACT integer basis points on both engines
+    (llm/textanalysis.py::quality_score / quality_sql — the sf0.1 parity
+    gate caught the old round(double, 4) flipping on exact .00005
+    boundaries, PARITY r12)."""
+    d = _t(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        quality_score("text").alias("quality"),
+        language_id("text").alias("lang_pred"),
+    )
 
 
 @register(
@@ -2071,9 +2062,21 @@ def simhash_near_dup_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+from ..llm.curation import hashed_classifier_sum_sql  # noqa: E402
+
+
 @register(
     "classifier_score_documents",
-    sql=None,  # assigned below: needs the generated weight-fold fragment
+    sql=f"""
+WITH w AS (SELECT doc_id, {_W} AS words FROM documents),
+s AS (SELECT doc_id, {hashed_classifier_sum_sql('words')} AS wsum,
+             len(words) AS n
+      FROM w)
+SELECT doc_id, wsum,
+       CASE WHEN n > 0 THEN round(wsum / (4096.0 * n), 6) END AS logit,
+       wsum > 0 AS keep
+FROM s
+""",
 )
 def classifier_score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed-feature linear classifier scored in the scan
@@ -2107,46 +2110,29 @@ def classifier_score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_classifier_sql() -> None:
-    from ..llm.curation import hashed_classifier_sum_sql
+from ..llm.curation import normalize_url_sql  # noqa: E402
 
-    QUERIES["classifier_score_documents"]["sql"] = f"""
-WITH w AS (SELECT doc_id, {_W} AS words FROM documents),
-s AS (SELECT doc_id, {hashed_classifier_sum_sql('words')} AS wsum,
-             len(words) AS n
-      FROM w)
-SELECT doc_id, wsum,
-       CASE WHEN n > 0 THEN round(wsum / (4096.0 * n), 6) END AS logit,
-       wsum > 0 AS keep
-FROM s
-"""
+_URL_DEDUP_URL_SQL = (
+    "CASE doc_id % 4 "
+    "WHEN 0 THEN 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) || '?id=7' "
+    "WHEN 1 THEN 'HTTP://EXAMPLE' || (doc_id % 50) || '.COM/p/' || (doc_id % 200) || '/' "
+    "WHEN 2 THEN 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) "
+    "|| '?utm_source=x&utm_campaign=y&id=7' "
+    "ELSE 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) "
+    "|| '?utm_source=a&utm_medium=b#frag' END"
+)
 
 
-_install_classifier_sql()
-
-
-def _install_url_dedup_sql() -> None:
-    from ..llm.curation import normalize_url_sql
-
-    url = (
-        "CASE doc_id % 4 "
-        "WHEN 0 THEN 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) || '?id=7' "
-        "WHEN 1 THEN 'HTTP://EXAMPLE' || (doc_id % 50) || '.COM/p/' || (doc_id % 200) || '/' "
-        "WHEN 2 THEN 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) "
-        "|| '?utm_source=x&utm_campaign=y&id=7' "
-        "ELSE 'http://example' || (doc_id % 50) || '.com/p/' || (doc_id % 200) "
-        "|| '?utm_source=a&utm_medium=b#frag' END"
-    )
-    QUERIES["url_dedup_documents"]["sql"] = f"""
-WITH u AS (SELECT doc_id, {url} AS url FROM documents),
+@register(
+    "url_dedup_documents",
+    sql=f"""
+WITH u AS (SELECT doc_id, {_URL_DEDUP_URL_SQL} AS url FROM documents),
 c AS (SELECT doc_id, {normalize_url_sql('url')} AS canon_url FROM u)
 SELECT canon_url, CAST(count(*) AS BIGINT) AS n_variants,
        CAST(min(doc_id) AS BIGINT) AS keeper
 FROM c GROUP BY canon_url
-"""
-
-
-@register("url_dedup_documents", sql=None)  # SQL installed below (generated chain)
+""",
+)
 def url_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-corpus URL canonicalization + dedup (llm/curation.py::
     normalize_url): deterministic dirty variants — uppercase scheme/host,
@@ -2179,9 +2165,6 @@ def url_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_variants"),
         F.min("doc_id").cast("long").alias("keeper"),
     )
-
-
-_install_url_dedup_sql()
 
 
 @register(
@@ -2377,17 +2360,17 @@ def range_join_events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_hll_sql() -> None:
-    from ..operators.sketches import hll_sql
+from ..operators.sketches import hll_sql  # noqa: E402
 
-    QUERIES["hll_distinct_orders"]["sql"] = f"""
+
+@register(
+    "hll_distinct_orders",
+    sql=f"""
 WITH est AS ({hll_sql("o_custkey", "orders")}),
 ex AS (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_exact FROM orders)
 SELECT est.hll_estimate, est.n_registers_used, ex.n_exact FROM est, ex
-"""
-
-
-@register("hll_distinct_orders", sql=None)  # SQL installed below (generated)
+""",
+)
 def hll_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable HyperLogLog (operators/sketches.py): distinct buyers
     estimated from 256 integer registers derived from md5 — reproducible
@@ -2405,9 +2388,6 @@ def hll_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = hll_distinct(o, "o_custkey")
     exact = o.agg(F.countDistinct("o_custkey").cast("long").alias("n_exact"))
     return est.crossJoin(exact)
-
-
-_install_hll_sql()
 
 
 @register(
@@ -2694,37 +2674,36 @@ def streaming_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_bloom_sql() -> None:
-    from ..llm.curation import md5_bucket_sql
+_BLOOM_FOLDS_SQL = [
+    "(" + md5_bucket_sql(f"'{i}:' || gm", 5) + ") % 65536" for i in range(3)
+]
 
-    folds = [
-        "(" + md5_bucket_sql(f"'{i}:' || gm", 5) + ") % 65536" for i in range(3)
-    ]
-    QUERIES["bloom_decontaminate_documents"]["sql"] = f"""
+
+@register(
+    "bloom_decontaminate_documents",
+    sql=f"""
 WITH w AS (SELECT doc_id, {_W} AS words FROM documents),
 g AS (SELECT doc_id, {_SH5} AS s FROM w),
 bg AS (SELECT DISTINCT unnest(s) AS gm FROM g WHERE doc_id % 97 = 0),
 bits AS (
-  SELECT DISTINCT {folds[0]} AS bit FROM bg
-  UNION SELECT DISTINCT {folds[1]} FROM bg
-  UNION SELECT DISTINCT {folds[2]} FROM bg
+  SELECT DISTINCT {_BLOOM_FOLDS_SQL[0]} AS bit FROM bg
+  UNION SELECT DISTINCT {_BLOOM_FOLDS_SQL[1]} FROM bg
+  UNION SELECT DISTINCT {_BLOOM_FOLDS_SQL[2]} FROM bg
 ),
 dg AS (SELECT DISTINCT doc_id, unnest(s) AS gm FROM g),
 inb AS (
   SELECT doc_id, gm,
-         {folds[0]} IN (SELECT bit FROM bits)
-         AND {folds[1]} IN (SELECT bit FROM bits)
-         AND {folds[2]} IN (SELECT bit FROM bits) AS in_bloom
+         {_BLOOM_FOLDS_SQL[0]} IN (SELECT bit FROM bits)
+         AND {_BLOOM_FOLDS_SQL[1]} IN (SELECT bit FROM bits)
+         AND {_BLOOM_FOLDS_SQL[2]} IN (SELECT bit FROM bits) AS in_bloom
   FROM dg
 )
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
        CAST(sum(CASE WHEN in_bloom THEN 1 ELSE 0 END) AS BIGINT) AS n_bloom_hits,
        sum(CASE WHEN in_bloom THEN 1 ELSE 0 END) > 0 AS contaminated
 FROM inb GROUP BY doc_id
-"""
-
-
-@register("bloom_decontaminate_documents", sql=None)  # SQL installed below
+""",
+)
 def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Space-bounded decontamination (llm/curation.py::bloom_decontaminate):
     the benchmark's 5-gram set compressed to 3 md5-derived bit positions per
@@ -2741,9 +2720,6 @@ def bloom_decontaminate_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return bloom_decontaminate(d, bench, "text", "doc_id", n=5).select(
         F.col("id").alias("doc_id"), "n_grams", "n_bloom_hits", "contaminated"
     )
-
-
-_install_bloom_sql()
 
 
 @register(
@@ -3652,13 +3628,10 @@ _BM25_QUERIES = [
 ]
 
 
-def _install_bm25_sql() -> None:
-    from ..llm.retrieval import bm25_sql
-
-    QUERIES["bm25_topk_documents"]["sql"] = bm25_sql(_BM25_QUERIES, topk=5)
+from ..llm.retrieval import bm25_sql  # noqa: E402
 
 
-@register("bm25_topk_documents", sql=None)  # SQL installed below (generated)
+@register("bm25_topk_documents", sql=bm25_sql(_BM25_QUERIES, topk=5))
 def bm25_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 retrieval (llm/retrieval.py::bm25_topk): 4 queries scored
     against the whole corpus, top-5 docs each — the engine-native form of the
@@ -3671,22 +3644,19 @@ def bm25_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(spark, d, _BM25_QUERIES, "text", "doc_id", topk=5)
 
 
-_install_bm25_sql()
+from ..operators.sketches import cms_sql  # noqa: E402
 
 
-def _install_cms_sql() -> None:
-    from ..operators.sketches import cms_sql
-
-    QUERIES["cms_user_frequency_events"]["sql"] = f"""
+@register(
+    "cms_user_frequency_events",
+    sql=f"""
 WITH est AS ({cms_sql("user_id", "events")}),
 tru AS (SELECT user_id AS key, CAST(count(*) AS BIGINT) AS true_cnt
         FROM events GROUP BY user_id)
 SELECT t.key AS user_id, t.true_cnt, e.est
 FROM tru t JOIN est e ON t.key = e.key
-"""
-
-
-@register("cms_user_frequency_events", sql=None)  # SQL installed below (generated)
+""",
+)
 def cms_user_frequency_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable count-min sketch (operators/sketches.py::cms_sketch,
     same md5 portability contract as the HLL): per-user frequency estimates
@@ -3705,9 +3675,6 @@ def cms_user_frequency_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tru.join(est, F.col("user_id") == F.col("key")).select(
         "user_id", "true_cnt", "est"
     )
-
-
-_install_cms_sql()
 
 
 from ..operators.linkage import phonetic_block_key_sql as _blk_sql
@@ -3900,31 +3867,30 @@ def streaming_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HYBRID_IDS = [7, 23, 41]
 _HYBRID_CHANNEL_K = 50
+_HYBRID_IDS_SQL = ", ".join(str(i) for i in _HYBRID_IDS)
+_HYBRID_BM25_SQL = bm25_sql(
+    [],
+    topk=_HYBRID_CHANNEL_K,
+    docs_sql="SELECT doc_id AS id, text FROM documents",
+    queries_sql=(
+        f"SELECT doc_id AS query_id, text AS qtext FROM documents"
+        f" WHERE doc_id IN ({_HYBRID_IDS_SQL})"
+    ),
+)
+_HYBRID_COS_SQL = _COS.replace("qv", "q.embedding").replace("cv", "c.embedding")
 
 
-def _install_hybrid_sql() -> None:
-    from ..llm.retrieval import bm25_sql
-
-    ids = ", ".join(str(i) for i in _HYBRID_IDS)
-    bm25 = bm25_sql(
-        [],
-        topk=_HYBRID_CHANNEL_K,
-        docs_sql="SELECT doc_id AS id, text FROM documents",
-        queries_sql=(
-            f"SELECT doc_id AS query_id, text AS qtext FROM documents"
-            f" WHERE doc_id IN ({ids})"
-        ),
-    )
-    cosx = _COS.replace("qv", "q.embedding").replace("cv", "c.embedding")
-    QUERIES["hybrid_rrf_documents"]["sql"] = f"""
-WITH rank_t AS (SELECT query_id, id, rank AS rank_t FROM ({bm25})),
+@register(
+    "hybrid_rrf_documents",
+    sql=f"""
+WITH rank_t AS (SELECT query_id, id, rank AS rank_t FROM ({_HYBRID_BM25_SQL})),
 rank_v AS (
   SELECT query_id, id, rank_v FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY round({cosx}, 4) DESC, c.vec_id ASC) AS rank_v
-    FROM (SELECT * FROM embeddings WHERE vec_id IN ({ids})) q, embeddings c
+             ORDER BY round({_HYBRID_COS_SQL}, 4) DESC, c.vec_id ASC) AS rank_v
+    FROM (SELECT * FROM embeddings WHERE vec_id IN ({_HYBRID_IDS_SQL})) q, embeddings c
   ) WHERE rank_v <= {_HYBRID_CHANNEL_K}
 ),
 f AS (
@@ -3942,10 +3908,8 @@ SELECT query_id,
        id, round(rrf, 6) AS rrf_score
 FROM f
 QUALIFY rank <= 5
-"""
-
-
-@register("hybrid_rrf_documents", sql=None)  # SQL installed below (generated)
+""",
+)
 def hybrid_rrf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search (llm/retrieval.py::hybrid_rrf): BM25 lexical ranking and
     exact-cosine vector ranking fused with reciprocal-rank fusion
@@ -3963,23 +3927,20 @@ def hybrid_rrf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_hybrid_sql()
+from ..operators.sketches import hll_by_sql  # noqa: E402
 
 
-def _install_hll_by_sql() -> None:
-    from ..operators.sketches import hll_by_sql
-
-    QUERIES["hll_distinct_by_status"]["sql"] = f"""
+@register(
+    "hll_distinct_by_status",
+    sql=f"""
 WITH est AS ({hll_by_sql("o_custkey", "o_orderstatus", "orders")}),
 tru AS (SELECT o_orderstatus AS g, CAST(count(DISTINCT o_custkey) AS BIGINT)
                AS exact_distinct
         FROM orders GROUP BY o_orderstatus)
 SELECT t.g AS status, t.exact_distinct, e.hll_estimate, e.n_registers_used
 FROM tru t JOIN est e ON t.g = e.g
-"""
-
-
-@register("hll_distinct_by_status", sql=None)  # SQL installed below (generated)
+""",
+)
 def hll_distinct_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED portable HLL (operators/sketches.py::hll_distinct_by):
     approximate distinct customers per order status next to the exact
@@ -4004,9 +3965,6 @@ def hll_distinct_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_registers_used",
         )
     )
-
-
-_install_hll_by_sql()
 
 
 @register(
@@ -4154,20 +4112,20 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_cms_join_sql() -> None:
-    from ..operators.sketches import cms_join_size_sql
+from ..operators.sketches import cms_join_size_sql  # noqa: E402
 
-    QUERIES["cms_join_size_orders"]["sql"] = f"""
+
+@register(
+    "cms_join_size_orders",
+    sql=f"""
 WITH est AS ({cms_join_size_sql("o_orderkey", "orders", "l_orderkey", "lineitem")}),
 tru AS (
   SELECT CAST(count(*) AS BIGINT) AS exact_join_size
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 )
 SELECT e.est_join_size, t.exact_join_size FROM est e CROSS JOIN tru t
-"""
-
-
-@register("cms_join_size_orders", sql=None)  # SQL installed below (generated)
+""",
+)
 def cms_join_size_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-size estimation WITHOUT running the join (operators/sketches.py::
     cms_join_size, the CM inner-product estimator): the orders and lineitem
@@ -4186,9 +4144,6 @@ def cms_join_size_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("exact_join_size")
     )
     return est.crossJoin(tru)
-
-
-_install_cms_join_sql()
 
 
 @register(
@@ -5251,16 +5206,16 @@ def bigram_lm_nll_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_lm_scores(train, d.select("doc_id", "text"), "text", "doc_id")
 
 
-def _install_kmv_sql() -> None:
-    from ..operators.sketches import kmv_set_ops_sql
+from ..operators.sketches import kmv_set_ops_sql  # noqa: E402
 
-    QUERIES["kmv_setops_users_events"]["sql"] = kmv_set_ops_sql(
+
+@register(
+    "kmv_setops_users_events",
+    sql=kmv_set_ops_sql(
         "user_id", "(SELECT user_id FROM events WHERE event_type = 'click')",
         "user_id", "(SELECT user_id FROM events WHERE event_type = 'purchase')",
-    )
-
-
-@register("kmv_setops_users_events", sql=None)  # SQL installed below (generated)
+    ),
+)
 def kmv_setops_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct sketches with SET ALGEBRA (operators/sketches.py::
     kmv_sketch/kmv_set_ops — Beyer et al. 2007): clicking users vs
@@ -5280,20 +5235,17 @@ def kmv_setops_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_set_ops(a, b)
 
 
-_install_kmv_sql()
+from ..operators.sketches import sampled_quantiles_sql  # noqa: E402
 
 
-def _install_sampled_quantiles_sql() -> None:
-    from ..operators.sketches import sampled_quantiles_sql
-
-    QUERIES["sampled_quantiles_lineitem"]["sql"] = sampled_quantiles_sql(
+@register(
+    "sampled_quantiles_lineitem",
+    sql=sampled_quantiles_sql(
         "l_extendedprice",
         "(l_orderkey || ':' || l_linenumber)",
         "lineitem",
-    )
-
-
-@register("sampled_quantiles_lineitem", sql=None)  # SQL installed below (generated)
+    ),
+)
 def sampled_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order statistics without a global sort (operators/sketches.py::
     sampled_quantiles): price quantiles from a deterministic 1024-row
@@ -5312,21 +5264,19 @@ def sampled_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_sampled_quantiles_sql()
+from ..operators.profile import psi_drift_sql  # noqa: E402
+
+_PSI_HALF_SQL = f"{md5_bucket_sql('doc_id')} % 2"
 
 
-def _install_psi_sql() -> None:
-    from ..operators.profile import psi_drift_sql
-
-    half = f"{md5_bucket_sql('doc_id')} % 2"
-    QUERIES["psi_drift_documents"]["sql"] = psi_drift_sql(
-        f"(SELECT lang, source FROM documents WHERE {half} = 0)",
-        f"(SELECT lang, source FROM documents WHERE {half} = 1)",
+@register(
+    "psi_drift_documents",
+    sql=psi_drift_sql(
+        f"(SELECT lang, source FROM documents WHERE {_PSI_HALF_SQL} = 0)",
+        f"(SELECT lang, source FROM documents WHERE {_PSI_HALF_SQL} = 1)",
         ["lang", "source"],
-    )
-
-
-@register("psi_drift_documents", sql=None)  # SQL installed below (generated)
+    ),
+)
 def psi_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index drift monitor (operators/profile.py::
     psi_drift): the corpus' (lang, source) mix compared across two
@@ -5347,18 +5297,13 @@ def psi_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_drift(a, b, ["lang", "source"])
 
 
-_install_psi_sql()
+from ..llm.linalg import second_moments_sql  # noqa: E402
 
 
-def _install_second_moments_sql() -> None:
-    from ..llm.linalg import second_moments_sql
-
-    QUERIES["embedding_covariance"]["sql"] = second_moments_sql(
-        "SELECT embedding FROM embeddings"
-    )
-
-
-@register("embedding_covariance", sql=None)  # SQL installed below (generated)
+@register(
+    "embedding_covariance",
+    sql=second_moments_sql("SELECT embedding FROM embeddings"),
+)
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed second moments / covariance of the embedding corpus
     (llm/linalg.py::second_moments_q) — the map-side partial X^T X pass
@@ -5376,9 +5321,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return second_moments_q(e.select("embedding"))
 
 
-_install_second_moments_sql()
-
-
 #: pinned integer component matrix (k=2, d=64) for the pca_project oracle
 #: gate — deterministic small weights so every reduction stays exact int64
 PCA_PINNED_COMPONENTS = [
@@ -5387,15 +5329,15 @@ PCA_PINNED_COMPONENTS = [
 ]
 
 
-def _install_pca_project_sql() -> None:
-    from ..llm.linalg import pca_project_pinned_sql
+from ..llm.linalg import pca_project_pinned_sql  # noqa: E402
 
-    QUERIES["pca_project_embeddings"]["sql"] = pca_project_pinned_sql(
+
+@register(
+    "pca_project_embeddings",
+    sql=pca_project_pinned_sql(
         "SELECT vec_id, embedding FROM embeddings", PCA_PINNED_COMPONENTS
-    )
-
-
-@register("pca_project_embeddings", sql=None)  # SQL installed below (generated)
+    ),
+)
 def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA projection pass (llm/linalg.py::pca_project) on PINNED integer
     components — the oracle gate for the projection machinery (scan-local
@@ -5419,24 +5361,22 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_pca_project_sql()
+from ..operators.profile import psi_drift_by_sql  # noqa: E402
 
-
-def _install_streaming_psi_sql() -> None:
-    from ..operators.profile import psi_drift_by_sql
-
-    ref = """SELECT event_type,
+_STREAM_PSI_REF_SQL = """SELECT event_type,
        CAST(count(*) AS BIGINT) AS count_a FROM events GROUP BY 1"""
-    cur = """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
+_STREAM_PSI_CUR_SQL = """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
          AS window_start,
        event_type, CAST(count(*) AS BIGINT) AS count_b
 FROM events GROUP BY 1, 2"""
-    QUERIES["streaming_psi_events"]["sql"] = psi_drift_by_sql(
-        ref, cur, ["window_start"], ["event_type"]
-    )
 
 
-@register("streaming_psi_events", sql=None)  # SQL installed below (generated)
+@register(
+    "streaming_psi_events",
+    sql=psi_drift_by_sql(
+        _STREAM_PSI_REF_SQL, _STREAM_PSI_CUR_SQL, ["window_start"], ["event_type"]
+    ),
+)
 def streaming_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-window drift monitoring on a TRUE stream: the tumbling 1h
     event_type counts run as a watermarked Structured Streaming query
@@ -5462,9 +5402,6 @@ def streaming_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("count_a"))
     )
     return psi_drift_by(ref, cur, ["window_start"], ["event_type"])
-
-
-_install_streaming_psi_sql()
 
 
 from ..operators.graph import label_propagation, label_propagation_sql  # noqa: E402
@@ -5522,20 +5459,23 @@ def label_propagation_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_kmv_overlap_sql() -> None:
-    from ..operators.sketches import kmv_adjacent_overlap_sql, kmv_by_sql
+from ..operators.sketches import kmv_adjacent_overlap_sql, kmv_by_sql  # noqa: E402
 
-    sketch = kmv_by_sql(
-        "user_id",
-        ["day"],
-        "(SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, user_id FROM events)",
-    )
-    QUERIES["kmv_day_overlap_events"]["sql"] = kmv_adjacent_overlap_sql(
-        sketch, "day", "strftime(CAST(g AS DATE) + INTERVAL 1 DAY, '%Y-%m-%d')"
-    )
+_KMV_DAY_SKETCH_SQL = kmv_by_sql(
+    "user_id",
+    ["day"],
+    "(SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, user_id FROM events)",
+)
 
 
-@register("kmv_day_overlap_events", sql=None)  # SQL installed below (generated)
+@register(
+    "kmv_day_overlap_events",
+    sql=kmv_adjacent_overlap_sql(
+        _KMV_DAY_SKETCH_SQL,
+        "day",
+        "strftime(CAST(g AS DATE) + INTERVAL 1 DAY, '%Y-%m-%d')",
+    ),
+)
 def kmv_day_overlap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day returning-user estimation from GROUPED KMV sketches
     (operators/sketches.py::kmv_sketch_by/kmv_adjacent_overlap): per-day
@@ -5556,18 +5496,13 @@ def kmv_day_overlap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_adjacent_overlap(s, "day", nxt)
 
 
-_install_kmv_overlap_sql()
+from ..operators.profile import mutual_information_sql  # noqa: E402
 
 
-def _install_mi_sql() -> None:
-    from ..operators.profile import mutual_information_sql
-
-    QUERIES["mutual_information_documents"]["sql"] = mutual_information_sql(
-        "documents", "lang", "source"
-    )
-
-
-@register("mutual_information_documents", sql=None)  # SQL installed below (generated)
+@register(
+    "mutual_information_documents",
+    sql=mutual_information_sql("documents", "lang", "source"),
+)
 def mutual_information_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-dependency profile (operators/profile.py::mutual_information):
     MI, entropies, and NMI of (lang, source) — the check a curation
@@ -5581,9 +5516,6 @@ def mutual_information_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     return mutual_information(d, "lang", "source")
-
-
-_install_mi_sql()
 
 
 @register(
@@ -5629,18 +5561,18 @@ def audio_segments_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _install_grouped_quantiles_sql() -> None:
-    from ..operators.sketches import sampled_quantiles_by_sql
+from ..operators.sketches import sampled_quantiles_by_sql  # noqa: E402
 
-    QUERIES["sampled_quantiles_by_returnflag"]["sql"] = sampled_quantiles_by_sql(
+
+@register(
+    "sampled_quantiles_by_returnflag",
+    sql=sampled_quantiles_by_sql(
         "l_extendedprice",
         "(l_orderkey || ':' || l_linenumber)",
         ["l_returnflag"],
         "lineitem",
-    )
-
-
-@register("sampled_quantiles_by_returnflag", sql=None)  # SQL installed below
+    ),
+)
 def sampled_quantiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group order statistics without sorts (operators/sketches.py::
     sampled_quantiles_by): price quantiles per l_returnflag from
@@ -5660,27 +5592,25 @@ def sampled_quantiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_install_grouped_quantiles_sql()
+from ..operators.windows import ewma_by_sql  # noqa: E402
+
+_EWMA_INNER_SQL = ewma_by_sql(
+    "(SELECT user_id, CAST(event_id AS BIGINT) AS event_id, ts,"
+    " round(value, 2) AS v FROM events)",
+    ["user_id"],
+    ["ts", "event_id"],
+    "v",
+)
 
 
-def _install_ewma_sql() -> None:
-    from ..operators.windows import ewma_by_sql
-
-    inner = ewma_by_sql(
-        "(SELECT user_id, CAST(event_id AS BIGINT) AS event_id, ts,"
-        " round(value, 2) AS v FROM events)",
-        ["user_id"],
-        ["ts", "event_id"],
-        "v",
-    )
-    QUERIES["ewma_user_value_events"]["sql"] = (
+@register(
+    "ewma_user_value_events",
+    sql=(
         "SELECT user_id, event_id,"
         " strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, v, ewma"
-        f" FROM ({inner})"
-    )
-
-
-@register("ewma_user_value_events", sql=None)  # SQL installed below (generated)
+        f" FROM ({_EWMA_INNER_SQL})"
+    ),
+)
 def ewma_user_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-window EWMA smoothing per user (operators/windows.py::
     ewma_by, alpha=0.25 over the trailing 8 events): the anomaly-monitor
@@ -5709,21 +5639,18 @@ def ewma_user_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_ewma_sql()
+from ..operators.sketches import winsorize_stats_by_sql  # noqa: E402
 
 
-def _install_winsorize_sql() -> None:
-    from ..operators.sketches import winsorize_stats_by_sql
-
-    QUERIES["winsorize_prices_returnflag"]["sql"] = winsorize_stats_by_sql(
+@register(
+    "winsorize_prices_returnflag",
+    sql=winsorize_stats_by_sql(
         "l_extendedprice",
         "(l_orderkey || ':' || l_linenumber)",
         ["l_returnflag"],
         "lineitem",
-    )
-
-
-@register("winsorize_prices_returnflag", sql=None)  # SQL installed below
+    ),
+)
 def winsorize_prices_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group winsorization audit (operators/sketches.py::
     winsorize_stats_by): prices clipped to each return flag's sampled
@@ -5743,9 +5670,6 @@ def winsorize_prices_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
         F.concat_ws(":", "l_orderkey", "l_linenumber"),
     )
-
-
-_install_winsorize_sql()
 
 
 @register(
@@ -5811,21 +5735,20 @@ def streaming_ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ewma",
     )
 
-def _install_source_overlap_sql() -> None:
-    from ..operators.sketches import kmv_by_sql, kmv_pairwise_overlap_sql
+from ..operators.sketches import kmv_pairwise_overlap_sql  # noqa: E402
 
-    seeded = (
-        "(SELECT source, CASE WHEN doc_id % 3 = 0 "
-        "THEN 'shared pool ' || CAST(doc_id % 50 AS VARCHAR) "
-        "ELSE text END AS content FROM documents)"
-    )
-    sketch = kmv_by_sql("content", ["source"], seeded)
-    QUERIES["source_overlap_matrix"]["sql"] = kmv_pairwise_overlap_sql(
-        sketch, "source"
-    )
+_OVERLAP_SEEDED_SQL = (
+    "(SELECT source, CASE WHEN doc_id % 3 = 0 "
+    "THEN 'shared pool ' || CAST(doc_id % 50 AS VARCHAR) "
+    "ELSE text END AS content FROM documents)"
+)
+_OVERLAP_SKETCH_SQL = kmv_by_sql("content", ["source"], _OVERLAP_SEEDED_SQL)
 
 
-@register("source_overlap_matrix", sql=None)  # SQL installed below (generated)
+@register(
+    "source_overlap_matrix",
+    sql=kmv_pairwise_overlap_sql(_OVERLAP_SKETCH_SQL, "source"),
+)
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source content-overlap MATRIX from grouped KMV sketches
     (operators/sketches.py::kmv_sketch_by/kmv_pairwise_overlap) — the
@@ -5857,9 +5780,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = kmv_sketch_by(d, ["source"], "content")
     return kmv_pairwise_overlap(s, "source")
-
-
-_install_source_overlap_sql()
 
 
 @register(
@@ -5907,13 +5827,10 @@ def edit_distance_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     return edit_distance_pairs(corpus, "t", "id", max_dist=2)
 
 
-def _install_tfidf_sql() -> None:
-    from ..llm.retrieval import tfidf_topk_terms_sql
-
-    QUERIES["tfidf_topk_terms_documents"]["sql"] = tfidf_topk_terms_sql(topk=3)
+from ..llm.retrieval import tfidf_topk_terms_sql  # noqa: E402
 
 
-@register("tfidf_topk_terms_documents", sql=None)  # SQL installed below (generated)
+@register("tfidf_topk_terms_documents", sql=tfidf_topk_terms_sql(topk=3))
 def tfidf_topk_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keyword extraction (llm/retrieval.py::tfidf_topk_terms):
     top-3 terms by smoothed TF-IDF — the document-major companion to BM25
@@ -5932,9 +5849,6 @@ def tfidf_topk_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("id", "doc_id").select(
         F.col("doc_id"), "term", "tf", "score", "rk"
     )
-
-
-_install_tfidf_sql()
 
 
 @register(
@@ -5996,17 +5910,17 @@ def mad_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_char_entropy_sql() -> None:
-    from ..llm.textanalysis import char_entropy_sql
+from ..llm.textanalysis import char_entropy_sql  # noqa: E402
 
-    QUERIES["char_entropy_documents"]["sql"] = (
+
+@register(
+    "char_entropy_documents",
+    sql=(
         "SELECT id AS doc_id, n_chars, entropy_bits FROM ("
         + char_entropy_sql("SELECT doc_id AS id, text FROM documents")
         + ")"
-    )
-
-
-@register("char_entropy_documents", sql=None)  # SQL installed below (generated)
+    ),
+)
 def char_entropy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document character-entropy quality signal
     (llm/textanalysis.py::char_entropy): Shannon bits over the char
@@ -6021,9 +5935,6 @@ def char_entropy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return char_entropy(d.select("doc_id", "text"), "text", "doc_id").select(
         F.col("id").alias("doc_id"), "n_chars", "entropy_bits"
     )
-
-
-_install_char_entropy_sql()
 
 
 @register(
@@ -6322,15 +6233,15 @@ def ols_trend_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_jsd_sql() -> None:
-    from ..operators.profile import js_divergence_by_sql
+from ..operators.profile import js_divergence_by_sql  # noqa: E402
 
-    QUERIES["js_divergence_sources"]["sql"] = js_divergence_by_sql(
+
+@register(
+    "js_divergence_sources",
+    sql=js_divergence_by_sql(
         f"SELECT source AS g, unnest({_W}) AS w FROM documents"
-    ).replace("group_a", "source_a").replace("group_b", "source_b")
-
-
-@register("js_divergence_sources", sql=None)  # SQL installed below (generated)
+    ).replace("group_a", "source_a").replace("group_b", "source_b"),
+)
 def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between every pair of document
     SOURCES' word distributions (operators/profile.py::js_divergence_by) —
@@ -6355,21 +6266,18 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_jsd_sql()
+from ..llm.curation import k_anonymity_sql  # noqa: E402
 
 
-def _install_kanon_sql() -> None:
-    from ..llm.curation import k_anonymity_sql
-
-    QUERIES["k_anonymity_events"]["sql"] = k_anonymity_sql(
+@register(
+    "k_anonymity_events",
+    sql=k_anonymity_sql(
         "SELECT event_type, CAST(ts AS DATE) AS day, user_id % 50 AS ubkt "
         "FROM events",
         ["event_type", "day", "ubkt"],
         k=10,
-    )
-
-
-@register("k_anonymity_events", sql=None)  # SQL installed below (generated)
+    ),
+)
 def k_anonymity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit (llm/curation.py::k_anonymity_report) over the
     quasi-identifier combination (event_type, day, user-bucket): the
@@ -6388,22 +6296,19 @@ def k_anonymity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity_report(q, ["event_type", "day", "ubkt"], k=10)
 
 
-_install_kanon_sql()
+from ..llm.curation import l_diversity_sql  # noqa: E402
 
 
-def _install_ldiv_sql() -> None:
-    from ..llm.curation import l_diversity_sql
-
-    QUERIES["l_diversity_events"]["sql"] = l_diversity_sql(
+@register(
+    "l_diversity_events",
+    sql=l_diversity_sql(
         "SELECT event_type, CAST(ts AS DATE) AS day, user_id % 50 AS ubkt "
         "FROM events",
         ["day", "ubkt"],
         "event_type",
         l=3,
-    )
-
-
-@register("l_diversity_events", sql=None)  # SQL installed below (generated)
+    ),
+)
 def l_diversity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (llm/curation.py::l_diversity_report) — the
     homogeneity-attack companion to ``k_anonymity_events``: per (day,
@@ -6424,22 +6329,18 @@ def l_diversity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l_diversity_report(q, ["day", "ubkt"], "event_type", l=3)
 
 
-_install_ldiv_sql()
+from ..operators.profile import ks_two_sample_by_sql  # noqa: E402
+
+_KS_INNER_SQL = ks_two_sample_by_sql(
+    "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
+    "ts >= TIMESTAMP '2024-01-16' AS s FROM events"
+)
 
 
-def _install_ks_sql() -> None:
-    from ..operators.profile import ks_two_sample_by_sql
-
-    inner = ks_two_sample_by_sql(
-        "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
-        "ts >= TIMESTAMP '2024-01-16' AS s FROM events"
-    )
-    QUERIES["ks_drift_events"]["sql"] = (
-        f"SELECT g AS event_type, n_a, n_b, ks_d FROM ({inner}) ks"
-    )
-
-
-@register("ks_drift_events", sql=None)  # SQL installed below (generated)
+@register(
+    "ks_drift_events",
+    sql=f"SELECT g AS event_type, n_a, n_b, ks_d FROM ({_KS_INNER_SQL}) ks",
+)
 def ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type two-sample Kolmogorov-Smirnov drift between the first
     and second half of the month (operators/profile.py::ks_two_sample_by) —
@@ -6462,18 +6363,15 @@ def ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks_two_sample_by(q, "event_type", "v_cents", "is_b")
 
 
-_install_ks_sql()
+from ..operators.profile import chi_square_independence_sql  # noqa: E402
 
 
-def _install_chi2_sql() -> None:
-    from ..operators.profile import chi_square_independence_sql
-
-    QUERIES["chi_square_orders"]["sql"] = chi_square_independence_sql(
+@register(
+    "chi_square_orders",
+    sql=chi_square_independence_sql(
         "SELECT o_orderstatus AS xv, o_orderpriority AS yv FROM orders"
-    )
-
-
-@register("chi_square_orders", sql=None)  # SQL installed below (generated)
+    ),
+)
 def chi_square_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence test of order status vs priority
     (operators/profile.py::chi_square_independence) with Cramér's V — the
@@ -6487,18 +6385,13 @@ def chi_square_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi_square_independence(o, "o_orderstatus", "o_orderpriority")
 
 
-_install_chi2_sql()
+from ..operators.profile import benford_report_sql  # noqa: E402
 
 
-def _install_benford_sql() -> None:
-    from ..operators.profile import benford_report_sql
-
-    QUERIES["benford_orders_totalprice"]["sql"] = benford_report_sql(
-        "SELECT o_totalprice AS amt FROM orders"
-    )
-
-
-@register("benford_orders_totalprice", sql=None)  # SQL installed below
+@register(
+    "benford_orders_totalprice",
+    sql=benford_report_sql("SELECT o_totalprice AS amt FROM orders"),
+)
 def benford_orders_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit of order totals
     (operators/profile.py::benford_report): observed vs expected
@@ -6511,9 +6404,6 @@ def benford_orders_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     return benford_report(o, "o_totalprice", cents=True)
-
-
-_install_benford_sql()
 
 
 @register(
@@ -6580,10 +6470,9 @@ def interpolate_events_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", F.round("value_i", 4).alias("value_i"))
 
 
-def _install_triangle_sql() -> None:
-    from ..operators.graph import triangle_count_sql
+from ..operators.graph import triangle_count_sql  # noqa: E402
 
-    knn_edges = f"""
+_TRIANGLE_KNN_EDGES_SQL = f"""
 WITH e AS (SELECT vec_id AS id, embedding FROM embeddings),
 cx AS (
   SELECT a.id AS qid, b.id AS cid,
@@ -6598,10 +6487,12 @@ ranked AS (
 )
 SELECT qid AS a, cid AS b FROM ranked WHERE rk <= 3
 """
-    QUERIES["triangle_count_knn_embeddings"]["sql"] = triangle_count_sql(knn_edges)
 
 
-@register("triangle_count_knn_embeddings", sql=None)  # SQL installed below
+@register(
+    "triangle_count_knn_embeddings",
+    sql=triangle_count_sql(_TRIANGLE_KNN_EDGES_SQL),
+)
 def triangle_count_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the exact top-3 cosine kNN graph
     (operators/graph.py::triangle_count): triangles, wedges, and
@@ -6617,9 +6508,6 @@ def triangle_count_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame
     e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     edges = knn_graph(e, "vec_id", "embedding", k=3, strategy="exact")
     return triangle_count(edges, "query_id", "neighbour_id")
-
-
-_install_triangle_sql()
 
 
 @register(
@@ -6663,24 +6551,25 @@ def streaming_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_cusum_sql() -> None:
-    from ..operators.profile import cusum_by_sql
+from ..operators.profile import cusum_by_sql  # noqa: E402
 
-    inner = cusum_by_sql(
-        "SELECT event_type AS g, epoch_us(ts) AS ord1, event_id AS ord2, "
-        "CAST(round(value * 100) AS BIGINT) AS x, event_id AS rid FROM events",
-        target=5000,
-        slack_k=50,
-        threshold_h=20000,
-        with_id=True,
-    )
-    QUERIES["cusum_drift_events"]["sql"] = (
+_CUSUM_INNER_SQL = cusum_by_sql(
+    "SELECT event_type AS g, epoch_us(ts) AS ord1, event_id AS ord2, "
+    "CAST(round(value * 100) AS BIGINT) AS x, event_id AS rid FROM events",
+    target=5000,
+    slack_k=50,
+    threshold_h=20000,
+    with_id=True,
+)
+
+
+@register(
+    "cusum_drift_events",
+    sql=(
         f"SELECT g AS event_type, n, max_cusum, n_alarms, first_alarm_id "
-        f"FROM ({inner}) c"
-    )
-
-
-@register("cusum_drift_events", sql=None)  # SQL installed below (generated)
+        f"FROM ({_CUSUM_INNER_SQL}) c"
+    ),
+)
 def cusum_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type one-sided CUSUM changepoint scan
     (operators/profile.py::cusum_by, Page 1954): where PSI/KS/JSD compare
@@ -6711,21 +6600,18 @@ def cusum_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_cusum_sql()
+from ..operators.frequent import copurchase_pairs_sql  # noqa: E402
 
 
-def _install_copurchase_sql() -> None:
-    from ..operators.frequent import copurchase_pairs_sql
-
-    QUERIES["copurchase_parts_orders"]["sql"] = copurchase_pairs_sql(
+@register(
+    "copurchase_parts_orders",
+    sql=copurchase_pairs_sql(
         "SELECT l_orderkey AS bk, l_partkey AS it FROM lineitem",
         min_item_support=3,
         min_pair_support=3,
         max_basket_size=1000,
-    )
-
-
-@register("copurchase_parts_orders", sql=None)  # SQL installed below
+    ),
+)
 def copurchase_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent part co-occurrence across orders
     (operators/frequent.py::copurchase_pairs): pairs of parts bought in the
@@ -6746,9 +6632,6 @@ def copurchase_parts_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_pair_support=3,
         max_basket_size=1000,
     )
-
-
-_install_copurchase_sql()
 
 
 @register(
@@ -6803,20 +6686,21 @@ def streaming_cusum_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_welch_sql() -> None:
-    from ..operators.profile import welch_ttest_by_sql
+from ..operators.profile import welch_ttest_by_sql  # noqa: E402
 
-    inner = welch_ttest_by_sql(
-        "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
-        "user_id % 2 = 1 AS s FROM events"
-    )
-    QUERIES["ab_test_events"]["sql"] = (
+_WELCH_INNER_SQL = welch_ttest_by_sql(
+    "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
+    "user_id % 2 = 1 AS s FROM events"
+)
+
+
+@register(
+    "ab_test_events",
+    sql=(
         f"SELECT g AS event_type, n_a, n_b, mean_a, mean_b, t_stat, df_welch "
-        f"FROM ({inner}) w"
-    )
-
-
-@register("ab_test_events", sql=None)  # SQL installed below (generated)
+        f"FROM ({_WELCH_INNER_SQL}) w"
+    ),
+)
 def ab_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type Welch (unequal-variance) two-sample t-test
     (operators/profile.py::welch_ttest_by) between an odd/even user-id
@@ -6839,24 +6723,20 @@ def ab_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return welch_ttest_by(q, "event_type", "v_cents", "is_b")
 
 
-_install_welch_sql()
+from ..operators.profile import gini_by_sql  # noqa: E402
+
+_GINI_INNER_SQL = gini_by_sql(
+    "SELECT c.c_mktsegment AS g, r.cents AS x "
+    "FROM (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) "
+    "AS BIGINT) AS cents FROM orders GROUP BY o_custkey) r "
+    "JOIN customer c ON c.c_custkey = r.o_custkey"
+)
 
 
-def _install_gini_sql() -> None:
-    from ..operators.profile import gini_by_sql
-
-    inner = gini_by_sql(
-        "SELECT c.c_mktsegment AS g, r.cents AS x "
-        "FROM (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) "
-        "AS BIGINT) AS cents FROM orders GROUP BY o_custkey) r "
-        "JOIN customer c ON c.c_custkey = r.o_custkey"
-    )
-    QUERIES["gini_revenue_customers"]["sql"] = (
-        f"SELECT g AS c_mktsegment, n, total, gini FROM ({inner}) gi"
-    )
-
-
-@register("gini_revenue_customers", sql=None)  # SQL installed below
+@register(
+    "gini_revenue_customers",
+    sql=f"SELECT g AS c_mktsegment, n, total, gini FROM ({_GINI_INNER_SQL}) gi",
+)
 def gini_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-market-segment Gini coefficient of customer revenue
     (operators/profile.py::gini_by) — the scalar concentration readout
@@ -6885,18 +6765,13 @@ def gini_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gini_by(j, "c_mktsegment", "cents")
 
 
-_install_gini_sql()
+from ..operators.validate import fd_audit_sql  # noqa: E402
 
 
-def _install_fd_sql() -> None:
-    from ..operators.validate import fd_audit_sql
-
-    QUERIES["fd_audit_lineitem"]["sql"] = fd_audit_sql(
-        "SELECT l_partkey AS d0, l_suppkey AS dep FROM lineitem", n_det=1
-    )
-
-
-@register("fd_audit_lineitem", sql=None)  # SQL installed below (generated)
+@register(
+    "fd_audit_lineitem",
+    sql=fd_audit_sql("SELECT l_partkey AS d0, l_suppkey AS dep FROM lineitem", n_det=1),
+)
 def fd_audit_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency audit (operators/validate.py::fd_audit): does
     l_partkey determine l_suppkey? (It does not — parts ship from several
@@ -6912,16 +6787,10 @@ def fd_audit_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fd_audit(li, ["l_partkey"], "l_suppkey")
 
 
-_install_fd_sql()
+from ..llm.textanalysis import oov_rate_sql  # noqa: E402
 
 
-def _install_oov_sql() -> None:
-    from ..llm.textanalysis import oov_rate_sql
-
-    QUERIES["oov_rate_documents"]["sql"] = oov_rate_sql(_W, min_count=5)
-
-
-@register("oov_rate_documents", sql=None)  # SQL installed below (generated)
+@register("oov_rate_documents", sql=oov_rate_sql(_W, min_count=5))
 def oov_rate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document out-of-vocabulary rate in exact basis points
     (llm/textanalysis.py::oov_rate, min_count=5) — the tokenizer-coverage
@@ -6938,24 +6807,20 @@ def oov_rate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return oov_rate(d, "doc_id", "text", min_count=5)
 
 
-_install_oov_sql()
+from ..operators.profile import acf_by_sql  # noqa: E402
+
+_ACF_INNER_SQL = acf_by_sql(
+    "SELECT event_type AS g, CAST(ts AS DATE) AS o, "
+    "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x "
+    "FROM events GROUP BY event_type, CAST(ts AS DATE)",
+    lags=(1, 2, 3),
+)
 
 
-def _install_acf_sql() -> None:
-    from ..operators.profile import acf_by_sql
-
-    inner = acf_by_sql(
-        "SELECT event_type AS g, CAST(ts AS DATE) AS o, "
-        "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x "
-        "FROM events GROUP BY event_type, CAST(ts AS DATE)",
-        lags=(1, 2, 3),
-    )
-    QUERIES["acf_events"]["sql"] = (
-        f"SELECT g AS event_type, n, acf_1, acf_2, acf_3 FROM ({inner}) a"
-    )
-
-
-@register("acf_events", sql=None)  # SQL installed below (generated)
+@register(
+    "acf_events",
+    sql=f"SELECT g AS event_type, n, acf_1, acf_2, acf_3 FROM ({_ACF_INNER_SQL}) a",
+)
 def acf_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type lag-1/2/3 autocorrelation of the DAILY value series
     (operators/profile.py::acf_by) — the persistence/periodicity screen
@@ -6982,23 +6847,21 @@ def acf_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return acf_by(daily, "event_type", "day", "cents", lags=(1, 2, 3))
 
 
-_install_acf_sql()
+from ..operators.profile import seasonal_index_by_sql  # noqa: E402
+
+_SEASONAL_INNER_SQL = seasonal_index_by_sql(
+    "SELECT event_type AS g, CAST(hour(ts) AS BIGINT) AS slot, "
+    "CAST(round(value * 100) AS BIGINT) AS x FROM events"
+)
 
 
-def _install_seasonal_sql() -> None:
-    from ..operators.profile import seasonal_index_by_sql
-
-    inner = seasonal_index_by_sql(
-        "SELECT event_type AS g, CAST(hour(ts) AS BIGINT) AS slot, "
-        "CAST(round(value * 100) AS BIGINT) AS x FROM events"
-    )
-    QUERIES["seasonality_hourly_events"]["sql"] = (
+@register(
+    "seasonality_hourly_events",
+    sql=(
         f"SELECT g AS event_type, slot AS hour_of_day, n_s, slot_total, index_bp "
-        f"FROM ({inner}) s"
-    )
-
-
-@register("seasonality_hourly_events", sql=None)  # SQL installed below
+        f"FROM ({_SEASONAL_INNER_SQL}) s"
+    ),
+)
 def seasonality_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonal index per event type in EXACT basis points
     (operators/profile.py::seasonal_index_by): 10000 = the hour runs at
@@ -7027,18 +6890,13 @@ def seasonality_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_seasonal_sql()
+from ..operators.windows import session_paths_sql  # noqa: E402
 
 
-def _install_paths_sql() -> None:
-    from ..operators.windows import session_paths_sql
-
-    QUERIES["session_paths_events"]["sql"] = session_paths_sql(
-        gap_minutes=30, max_len=5, top_k=20
-    )
-
-
-@register("session_paths_events", sql=None)  # SQL installed below (generated)
+@register(
+    "session_paths_events",
+    sql=session_paths_sql(gap_minutes=30, max_len=5, top_k=20),
+)
 def session_paths_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 session journey paths (operators/windows.py::session_paths):
     30-minute-gap sessions (the session_windows_events contract), each
@@ -7054,22 +6912,18 @@ def session_paths_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_paths(ev, gap_minutes=30, max_len=5, top_k=20)
 
 
-_install_paths_sql()
+from ..operators.profile import rank_sum_auc_by_sql  # noqa: E402
+
+_MW_INNER_SQL = rank_sum_auc_by_sql(
+    "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
+    "user_id % 2 = 1 AS s FROM events"
+)
 
 
-def _install_mw_sql() -> None:
-    from ..operators.profile import rank_sum_auc_by_sql
-
-    inner = rank_sum_auc_by_sql(
-        "SELECT event_type AS g, CAST(round(value * 100) AS BIGINT) AS x, "
-        "user_id % 2 = 1 AS s FROM events"
-    )
-    QUERIES["mannwhitney_auc_events"]["sql"] = (
-        f"SELECT g AS event_type, n_a, n_b, u_stat, auc FROM ({inner}) mw"
-    )
-
-
-@register("mannwhitney_auc_events", sql=None)  # SQL installed below
+@register(
+    "mannwhitney_auc_events",
+    sql=f"SELECT g AS event_type, n_a, n_b, u_stat, auc FROM ({_MW_INNER_SQL}) mw",
+)
 def mannwhitney_auc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type Mann-Whitney U / exact ROC-AUC over the same odd/even
     cohort split as ``ab_test_events`` (operators/profile.py::
@@ -7090,16 +6944,10 @@ def mannwhitney_auc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rank_sum_auc_by(q, "event_type", "v_cents", "is_b")
 
 
-_install_mw_sql()
+from ..operators.profile import rfm_segments_sql  # noqa: E402
 
 
-def _install_rfm_sql() -> None:
-    from ..operators.profile import rfm_segments_sql
-
-    QUERIES["rfm_segments_orders"]["sql"] = rfm_segments_sql()
-
-
-@register("rfm_segments_orders", sql=None)  # SQL installed below (generated)
+@register("rfm_segments_orders", sql=rfm_segments_sql())
 def rfm_segments_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer RFM segmentation (operators/profile.py::rfm_segments):
     recency/frequency/monetary quintile scores per customer, rolled up to
@@ -7114,9 +6962,6 @@ def rfm_segments_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     return rfm_segments(o)
-
-
-_install_rfm_sql()
 
 
 @register(
@@ -7174,10 +7019,9 @@ def dau_mau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("day", "dau", "mau", bp.alias("stickiness_bp"))
 
 
-def _install_assort_sql() -> None:
-    from ..operators.graph import degree_assortativity_sql
+from ..operators.graph import degree_assortativity_sql  # noqa: E402
 
-    knn_edges = f"""
+_ASSORT_KNN_EDGES_SQL = f"""
 WITH ke AS (SELECT vec_id AS id, embedding FROM embeddings),
 cx AS (
   SELECT ka.id AS qid, kb.id AS cid,
@@ -7192,12 +7036,12 @@ ranked AS (
 )
 SELECT qid AS a, cid AS b FROM ranked WHERE rk <= 3
 """
-    QUERIES["assortativity_knn_embeddings"]["sql"] = degree_assortativity_sql(
-        knn_edges
-    )
 
 
-@register("assortativity_knn_embeddings", sql=None)  # SQL installed below
+@register(
+    "assortativity_knn_embeddings",
+    sql=degree_assortativity_sql(_ASSORT_KNN_EDGES_SQL),
+)
 def assortativity_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the exact top-3 cosine kNN graph
     (operators/graph.py::degree_assortativity) — does high-degree connect
@@ -7217,22 +7061,19 @@ def assortativity_knn_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return degree_assortativity(edges, "query_id", "neighbour_id")
 
 
-_install_assort_sql()
+from ..operators.profile import score_lift_deciles_sql  # noqa: E402
+
+_LIFT_SCORE_SQL = md5_bucket_sql("text", 3)
+_LIFT_SEEDED_SQL = "text || 'x'"  # literal 'x' suffix — NOT the lateral alias x
+_LIFT_LABEL_SQL = f"({md5_bucket_sql(_LIFT_SEEDED_SQL, 3)} < {_LIFT_SCORE_SQL})"
 
 
-def _install_lift_sql() -> None:
-    from ..llm.curation import md5_bucket_sql
-    from ..operators.profile import score_lift_deciles_sql
-
-    score = md5_bucket_sql("text", 3)
-    seeded = "text || 'x'"  # literal 'x' suffix — NOT the lateral alias x
-    label = f"({md5_bucket_sql(seeded, 3)} < {score})"
-    QUERIES["score_lift_documents"]["sql"] = score_lift_deciles_sql(
-        f"SELECT {score} AS x, {label} AS y FROM documents"
-    )
-
-
-@register("score_lift_documents", sql=None)  # SQL installed below (generated)
+@register(
+    "score_lift_documents",
+    sql=score_lift_deciles_sql(
+        f"SELECT {_LIFT_SCORE_SQL} AS x, {_LIFT_LABEL_SQL} AS y FROM documents"
+    ),
+)
 def score_lift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier lift/calibration table over a deterministic synthetic
     score (operators/profile.py::score_lift_deciles): score = 3-hex-digit
@@ -7253,20 +7094,16 @@ def score_lift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score_lift_deciles(q, "score", "label")
 
 
-_install_lift_sql()
+_HLL_BY_EVENT_TYPE_SQL = hll_by_sql("user_id", "event_type", "events")
 
 
-def _install_streaming_hll_sql() -> None:
-    from ..operators.sketches import hll_by_sql
-
-    inner = hll_by_sql("user_id", "event_type", "events")
-    QUERIES["streaming_hll_users_events"]["sql"] = (
+@register(
+    "streaming_hll_users_events",
+    sql=(
         f"SELECT g AS event_type, hll_estimate, n_registers_used "
-        f"FROM ({inner}) h"
-    )
-
-
-@register("streaming_hll_users_events", sql=None)  # SQL installed below
+        f"FROM ({_HLL_BY_EVENT_TYPE_SQL}) h"
+    ),
+)
 def streaming_hll_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.13 approximate distinct users per event type as a TRUE stateful
     stream (streaming/stateful.py::streaming_hll_distinct): the portable
@@ -7302,15 +7139,10 @@ def streaming_hll_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_streaming_hll_sql()
-
-
-def _install_hll_rollup_sql() -> None:
-    from ..operators.sketches import hll_by_sql
-
-    inner = hll_by_sql("user_id", "event_type", "events")
-    QUERIES["hll_rollup_events"]["sql"] = f"""
-WITH direct AS ({inner}),
+@register(
+    "hll_rollup_events",
+    sql=f"""
+WITH direct AS ({_HLL_BY_EVENT_TYPE_SQL}),
 days AS (
   SELECT event_type AS g,
          CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days
@@ -7318,10 +7150,8 @@ days AS (
 )
 SELECT d.g AS event_type, days.n_days, d.hll_estimate, d.n_registers_used
 FROM direct d JOIN days ON d.g = days.g
-"""
-
-
-@register("hll_rollup_events", sql=None)  # SQL installed below (generated)
+""",
+)
 def hll_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly distinct users per event type computed by MERGING the
     per-day HLL sketches — the sketch-reuse pattern a 100 TB rollup lives
@@ -7361,13 +7191,9 @@ def hll_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_hll_rollup_sql()
+from ..operators.linkage import golden_record_sql  # noqa: E402
 
-
-def _install_golden_sql() -> None:
-    from ..operators.linkage import golden_record_sql
-
-    seeded = """
+_GOLDEN_SEEDED_SQL = """
 SELECT c_custkey AS cl, c_name, c_mktsegment,
        CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR) AS acct_cents
 FROM customer
@@ -7383,12 +7209,14 @@ SELECT c_custkey,
             ELSE CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS VARCHAR) END
 FROM customer
 """
-    QUERIES["golden_record_customers"]["sql"] = golden_record_sql(
-        seeded, "cl", ["c_name", "c_mktsegment", "acct_cents"]
-    )
 
 
-@register("golden_record_customers", sql=None)  # SQL installed below
+@register(
+    "golden_record_customers",
+    sql=golden_record_sql(
+        _GOLDEN_SEEDED_SQL, "cl", ["c_name", "c_mktsegment", "acct_cents"]
+    ),
+)
 def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship after linkage (operators/linkage.py::golden_record):
     three copies of every customer — two clean, one corrupted
@@ -7426,16 +7254,10 @@ def golden_record_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return golden_record(seeded, "cl", ["c_name", "c_mktsegment", "acct_cents"])
 
 
-_install_golden_sql()
+from ..operators.windows import attribution_report_sql  # noqa: E402
 
 
-def _install_attribution_sql() -> None:
-    from ..operators.windows import attribution_report_sql
-
-    QUERIES["attribution_events"]["sql"] = attribution_report_sql("purchase")
-
-
-@register("attribution_events", sql=None)  # SQL installed below (generated)
+@register("attribution_events", sql=attribution_report_sql("purchase"))
 def attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch / last-touch conversion attribution over the event
     stream (operators/windows.py::attribution_report): every purchase
@@ -7452,18 +7274,7 @@ def attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return attribution_report(ev, "purchase")
 
 
-_install_attribution_sql()
-
-
-def _install_streaming_attr_sql() -> None:
-    from ..operators.windows import attribution_report_sql
-
-    QUERIES["streaming_attribution_events"]["sql"] = attribution_report_sql(
-        "purchase"
-    )
-
-
-@register("streaming_attribution_events", sql=None)  # SQL installed below
+@register("streaming_attribution_events", sql=attribution_report_sql("purchase"))
 def streaming_attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.13 first/last-touch attribution as a TRUE stateful stream
     (streaming/stateful.py::streaming_attribution): per user the state
@@ -7517,23 +7328,19 @@ def streaming_attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_streaming_attr_sql()
+from ..operators.profile import wape_backtest_by_sql  # noqa: E402
+
+_WAPE_INNER_SQL = wape_backtest_by_sql(
+    "SELECT event_type AS g, CAST(ts AS DATE) AS o, "
+    "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x "
+    "FROM events GROUP BY event_type, CAST(ts AS DATE)"
+)
 
 
-def _install_wape_sql() -> None:
-    from ..operators.profile import wape_backtest_by_sql
-
-    inner = wape_backtest_by_sql(
-        "SELECT event_type AS g, CAST(ts AS DATE) AS o, "
-        "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x "
-        "FROM events GROUP BY event_type, CAST(ts AS DATE)"
-    )
-    QUERIES["wape_backtest_events"]["sql"] = (
-        f"SELECT g AS event_type, n_periods, wape_bp FROM ({inner}) w"
-    )
-
-
-@register("wape_backtest_events", sql=None)  # SQL installed below (generated)
+@register(
+    "wape_backtest_events",
+    sql=f"SELECT g AS event_type, n_periods, wape_bp FROM ({_WAPE_INNER_SQL}) w",
+)
 def wape_backtest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest over the daily value series
     (operators/profile.py::wape_backtest_by): predict each day with the
@@ -7558,21 +7365,17 @@ def wape_backtest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wape_backtest_by(daily, "event_type", "day", "cents")
 
 
-_install_wape_sql()
+from ..operators.profile import pairwise_corr_by_sql  # noqa: E402
 
 
-def _install_crosscorr_sql() -> None:
-    from ..operators.profile import pairwise_corr_by_sql
-
-    inner = pairwise_corr_by_sql(
+@register(
+    "cross_corr_event_types",
+    sql=pairwise_corr_by_sql(
         "SELECT event_type AS g, CAST(ts AS DATE) AS o, "
         "CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x "
         "FROM events GROUP BY event_type, CAST(ts AS DATE)"
-    )
-    QUERIES["cross_corr_event_types"]["sql"] = inner
-
-
-@register("cross_corr_event_types", sql=None)  # SQL installed below
+    ),
+)
 def cross_corr_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson cross-correlation between every pair of event types' daily
     value series (operators/profile.py::pairwise_corr_by) — the
@@ -7597,13 +7400,9 @@ def cross_corr_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairwise_corr_by(daily, "event_type", "day", "cents")
 
 
-_install_crosscorr_sql()
+from ..llm.curation import c4_clean_sql  # noqa: E402
 
-
-def _install_c4_clean_sql() -> None:
-    from ..llm.curation import c4_clean_sql
-
-    corpus = f"""
+_C4_CORPUS_SQL = f"""
 WITH c4_base AS (SELECT doc_id, {_W} AS w FROM documents),
 c4_lined AS (
   SELECT doc_id,
@@ -7626,14 +7425,16 @@ SELECT doc_id,
                 THEN chr(10) || 'var x = {{ a: 1 }}.' ELSE '' END) AS text
 FROM c4_lined
 """
-    QUERIES["c4_clean_documents"]["sql"] = f"""
+
+
+@register(
+    "c4_clean_documents",
+    sql=f"""
 SELECT id AS doc_id, n_lines, n_kept, keep_doc,
        md5(cleaned_text) AS cleaned_md5
-FROM ({c4_clean_sql(corpus)}) c4_out
-"""
-
-
-@register("c4_clean_documents", sql=None)  # SQL installed below (generated)
+FROM ({c4_clean_sql(_C4_CORPUS_SQL)}) c4_out
+""",
+)
 def c4_clean_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 line + page cleaning (llm/curation.py::c4_clean — Raffel et al.
     2020 §2.2), the standard first pass of a web-scale curation pipeline:
@@ -7688,9 +7489,6 @@ def c4_clean_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_install_c4_clean_sql()
-
-
 @register(
     "ccnet_perplexity_buckets_documents",
     sql=f"""
@@ -7742,18 +7540,21 @@ def ccnet_perplexity_buckets_documents(spark: SparkSession, sf_dir: str) -> Data
     return perplexity_buckets(unigram_lm_scores(d, "text", "doc_id"))
 
 
-def _install_unicode_clean_sql() -> None:
-    from ..llm.curation import unicode_clean_sql
+from ..llm.curation import unicode_clean_sql  # noqa: E402
 
-    dirty = (
-        "text || CASE CAST(doc_id % 4 AS INTEGER)"
-        " WHEN 0 THEN ' caf' || 'e' || chr(769) || ' resume' || chr(769)"
-        " WHEN 1 THEN chr(160) || 'pinned' || chr(160) || ' value'"
-        " WHEN 2 THEN ' bell' || chr(7) || 'char' || chr(8203) || 'zero' || chr(65279)"
-        " ELSE '  spaced' || chr(9) || chr(9) || 'out  ' END"
-    )
-    QUERIES["unicode_normalize_documents"]["sql"] = f"""
-WITH u_in AS (SELECT doc_id, {dirty} AS text FROM documents)
+_UNICODE_DIRTY_SQL = (
+    "text || CASE CAST(doc_id % 4 AS INTEGER)"
+    " WHEN 0 THEN ' caf' || 'e' || chr(769) || ' resume' || chr(769)"
+    " WHEN 1 THEN chr(160) || 'pinned' || chr(160) || ' value'"
+    " WHEN 2 THEN ' bell' || chr(7) || 'char' || chr(8203) || 'zero' || chr(65279)"
+    " ELSE '  spaced' || chr(9) || chr(9) || 'out  ' END"
+)
+
+
+@register(
+    "unicode_normalize_documents",
+    sql=f"""
+WITH u_in AS (SELECT doc_id, {_UNICODE_DIRTY_SQL} AS text FROM documents)
 SELECT doc_id,
        {unicode_clean_sql('text')} AS cleaned_text,
        CAST(len(text) AS BIGINT) AS n_before,
@@ -7761,10 +7562,8 @@ SELECT doc_id,
        {unicode_clean_sql('text')} <> text AS changed,
        md5({unicode_clean_sql('text')}) AS cleaned_md5
 FROM u_in
-"""
-
-
-@register("unicode_normalize_documents", sql=None)  # SQL installed below
+""",
+)
 def unicode_normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode canonicalization (llm/curation.py::unicode_clean): NFC
     composition via an Arrow-batched pandas UDF — the one step Spark has no
@@ -7796,6 +7595,3 @@ def unicode_normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cleaned != dirty).alias("changed"),
         F.md5(cleaned).alias("cleaned_md5"),
     )
-
-
-_install_unicode_clean_sql()

@@ -31,7 +31,7 @@ from ..operators import (
     join_self,
     unpivot_regex,
 )
-from ..operators.caching import release_scoped
+from ..operators.caching import release_scoped, session_memo
 from ..operators.cdc import cdc_counts, hash_diff
 from ..operators.textops import content_hash, md5_doc_id
 from ..operators.translate import TranslationTable, split_and_translate
@@ -40,14 +40,23 @@ from ..session import local_df
 QUERIES: dict[str, dict] = {}
 
 
-def register(name: str, sql: str | None = None):
+def register(name: str, sql: str):
     """Register a (spark_fn, oracle_sql) query pair.
+
+    This is the one way to add a query: a single ``@register(name, sql=...)``
+    on its Spark function, with the DuckDB oracle SQL passed right there.
+    Generated oracles are built at import time from module-level fragments
+    next to the query. The oracle is required: a missing or empty ``sql``
+    raises ``ValueError`` naming the query, so no query can drop out of the
+    oracle gate unnoticed.
 
     The wrapper releases the PREVIOUS query's scoped caches (see
     operators/caching.py) at each invocation: sequential runners (driver
     correctness loop, bench) consume each result before calling the next
     query, so per-operator persist()s never accumulate across the session.
     """
+    if not sql or not sql.strip():
+        raise ValueError(f"query {name!r} registered without an oracle sql")
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,20 +71,16 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
-# Analyzed-plan cache for the immutable gate/bench tables, keyed by
-# (applicationId, sf_dir, table). `spark.read.parquet` eagerly lists files
-# and reads a footer for the schema — one or two small driver jobs per call
-# — and the registry calls _t() 1-3x per query x 200+ queries per suite
-# pass, always on the SAME immutable parquet inputs. Reusing the analyzed
-# DataFrame skips exactly that per-query listing/footer overhead (guide
-# §1.2 step 1: don't redo work). This caches the PLAN only — no data, no
-# results; every action still scans the parquet files. Keying by
-# applicationId drops entries with the session that built them; callers
-# that rewrite a table under a cached path must use a fresh dir (every
-# test fixture already does).
-_T_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# Analyzed-plan memo for the immutable gate/bench tables, keyed by
+# (sf_dir, table) within the session (operators/caching.py::session_memo).
+# `spark.read.parquet` eagerly lists files and reads a footer for the schema
+# — one or two small driver jobs per call — and the registry calls _t() 1-3x
+# per query x 200+ queries per suite pass, always on the SAME immutable
+# parquet inputs. Reusing the analyzed DataFrame skips exactly that
+# per-query listing/footer overhead (guide §1.2 step 1: don't redo work).
+# This caches the PLAN only — no data, no results; every action still scans
+# the parquet files. Callers that rewrite a table under a cached path must
+# use a fresh dir (every test fixture already does).
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Let AQE re-plan (coalesce/skew-split) stages that sit under a persist():
     # by default a cached plan's output partitioning is frozen, so a vanilla
@@ -83,13 +88,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # partitions — task overhead, not work (measured 10.7s -> 1.6s with the
     # conf on). Runtime-settable, so queries behave under ANY caller session.
     spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _T_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _t_read(spark, sf_dir, name)
-    _T_CACHE[key] = df
-    return df
+    return session_memo(("_t", sf_dir, name), lambda: _t_read(spark, sf_dir, name))
 
 
 def _t_read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -910,7 +909,10 @@ FROM (
 
 @register(
     "profile_orders",
-    sql=None,  # generated below (needs sketches.hll_by_sql at import time)
+    sql="WITH src AS (SELECT * FROM orders)\n"
+    + "\nUNION ALL\n".join(
+        _profile_hll_block(n, e) for n, e in _PROFILE_COLS.items()
+    ),
 )
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass table profile in its 100 TB-DEFAULT form
@@ -927,14 +929,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile_hll(_profile_src(spark, sf_dir)).withColumnRenamed(
         "column", "col_name"
     )
-
-
-QUERIES["profile_orders"]["sql"] = (
-    "WITH src AS (SELECT * FROM orders)\n"
-    + "\nUNION ALL\n".join(
-        _profile_hll_block(n, e) for n, e in _PROFILE_COLS.items()
-    )
-)
 
 
 @register(
@@ -1908,6 +1902,4 @@ def query_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {
-        name: spec["sql"] for name, spec in QUERIES.items() if spec["sql"]
-    }
+    return {name: spec["sql"] for name, spec in QUERIES.items()}

@@ -1,10 +1,13 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-configuration block is what we would ship to a 1000-executor cluster — AQE on
-(runtime re-planning, skew-join splitting, partition coalescing), broadcast
-threshold sized for dimension tables, Arrow enabled for the few pandas-UDF
-operators, and a UTC session timezone so results are oracle-comparable.
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` with a
+``$SPARK_GRAFT_DRIVER_MEM`` driver heap, both derived from the host by
+default (every core this process may use; half of physical RAM, at most 24g),
+so a session starts on the machine it is given. The same configuration block
+is what we would ship to a 1000-executor cluster — AQE on (runtime
+re-planning, skew-join splitting, partition coalescing), broadcast threshold
+sized for dimension tables, Arrow enabled for the few pandas-UDF operators,
+and a UTC session timezone so results are oracle-comparable.
 """
 
 from __future__ import annotations
@@ -12,6 +15,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Ceiling for the derived driver heap, however large the host.
+_MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def host_cpus() -> int:
+    """Cores this process may run on (honours taskset / cgroup cpusets)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_mem() -> str:
+    """Default driver heap as a JVM size: half of ``MemTotal``, capped at
+    24g. The other half stays free for Python workers and the OS; the heap
+    is pinned with ``-Xms``, so it must fit in physical RAM."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(total_kb // 1024 // 2, _MAX_DRIVER_MEM_MB)}m"
 
 
 def get_spark(
@@ -27,7 +47,7 @@ def get_spark(
     ``spark.sql.files.maxPartitionBytes`` sized so a scan task fits in memory,
     and AQE left on to coalesce/skew-split at runtime.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     # Long-lived-process memory retention (set BEFORE the JVM gateway
     # launches so the JVM and the reused Python workers it spawns inherit
     # them). Rationale (guide §5): a task's large numpy/Arrow buffers are
@@ -49,7 +69,7 @@ def get_spark(
         ("ARROW_DEFAULT_MEMORY_POOL", "system"),
     ):
         os.environ.setdefault(k, v)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -106,7 +126,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", driver_mem)
-        # Pin the committed heap to the max (-Xms = -Xmx): G1 UNCOMMITS
+        # Pin the committed heap to the max (-Xms = -Xmx; the derived default
+        # heap fits in physical RAM by construction): G1 UNCOMMITS
         # regions after full/periodic GCs, so a multi-query session that
         # GCs between queries re-faults the same heap pages over and over
         # — pure overhead on any OS, catastrophic on lazily-faulted VM

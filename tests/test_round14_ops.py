@@ -386,15 +386,35 @@ def test_t_cache_reuses_analyzed_plan(spark, sf_dir):
 
 def test_events_stream_schema_cache(spark, sf_dir):
     """read_events_stream infers the source schema once per (app, path) —
-    the second call must not re-run the footer job (observable as a cache
+    the second call must not re-run the footer job (observable as a memo
     hit), and the streamed frame keeps the converted timestamp column."""
+    from migdar_data_pipelines_spark.operators.caching import session_memo
     from migdar_data_pipelines_spark.streaming import windows as sw
 
+    def rebuilt():
+        raise AssertionError("schema memo missed")
+
     path = f"{sf_dir}/events.parquet"
-    s1 = sw.read_events_stream(spark, path)
-    key = (spark.sparkContext.applicationId, path)
-    assert key in sw._SCHEMA_CACHE
-    cached = sw._SCHEMA_CACHE[key]
+    key = ("read_events_stream", path)
+    sw.read_events_stream(spark, path)
+    cached = session_memo(key, rebuilt)  # a hit: the first call stored it
+    assert "ts" in cached.fieldNames()
     s2 = sw.read_events_stream(spark, path)
-    assert sw._SCHEMA_CACHE[key] is cached
+    assert session_memo(key, rebuilt) is cached
     assert dict(s2.dtypes)["ts"].startswith("timestamp")
+
+
+def test_session_memo_evicts_stopped_sessions(monkeypatch):
+    """Entries built under an application id that is no longer active are
+    dropped on the next miss; entries of the active application stay."""
+    from migdar_data_pipelines_spark.operators import caching
+
+    monkeypatch.setattr(caching, "_SESSION_MEMO", {})
+    monkeypatch.setattr(caching, "_active_app_id", lambda: "app-stopped")
+    caching.session_memo(("k", 1), lambda: "old")
+    assert caching.session_memo(("k", 1), lambda: "rebuilt") == "old"
+
+    monkeypatch.setattr(caching, "_active_app_id", lambda: "app-live")
+    assert caching.session_memo(("k", 1), lambda: "new") == "new"
+    caching.session_memo(("k", 2), lambda: "other")
+    assert set(caching._SESSION_MEMO) == {("app-live", "k", 1), ("app-live", "k", 2)}

@@ -63,6 +63,8 @@ sys.path.insert(0, _repo_root())
 import duckdb
 from pyspark.sql import SparkSession
 
+from migdar_data_pipelines_spark.session import host_driver_mem
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SIM_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -74,7 +76,7 @@ def main():
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", host_driver_mem())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

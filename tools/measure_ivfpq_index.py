@@ -68,6 +68,7 @@ def main() -> None:
         incremental_add_ivf_pq,
         search_ivf_pq_index,
     )
+    from migdar_data_pipelines_spark.session import host_driver_mem
 
     os.makedirs(SCALE_DIR, exist_ok=True)
     shutil.rmtree(WORK, ignore_errors=True)
@@ -75,7 +76,7 @@ def main() -> None:
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", host_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -59,7 +59,7 @@ n1 = fns["flagship_entity_rollup"](spark, "/root/testdata/sf0.001").count()
 # pandas-UDF path: worker-side callable shipped pickle-by-value (_serde.py)
 n2 = fns["uqratio_translate_nations"](spark, "/root/testdata/sf0.001").count()
 assert n1 > 0 and n2 > 0, (n1, n2)
-assert len(oracle_sqls()) > 150
+assert len(oracle_sqls()) == len(fns), (len(oracle_sqls()), len(fns))
 print(json.dumps({"flagship_rows": n1, "uqratio_rows": n2,
                   "resolved": os.path.dirname(m.__file__)}))
 spark.stop()
